@@ -169,7 +169,7 @@ object Bench {
     * round-over-round comparison (PERF_r10 `prev_bench_ok: false`).
     */
   def renderLine(allNames: Seq[String], allSamples: Map[String, Seq[Option[Double]]],
-      isolatedNames: Seq[String], harness: String, sfDir: String): String = {
+      isolatedNames: Seq[String], harness: String, sfDir: String, passes: Int = 2): String = {
     val results = allNames.map { name =>
       // a failed attempt must not masquerade as a fast run
       val goodTimes = allSamples.getOrElse(name, Seq.empty).flatten
@@ -187,14 +187,25 @@ object Bench {
     // are only comparable under the SAME methodology (the r4→r5 harness
     // change read as a phantom 1.22× regression until adjudicated), so
     // the JSON self-describes how it was measured; "isolated" names the
-    // rows timed in their own fresh JVM (empty when not chunking)
+    // rows timed in their own fresh JVM (empty when not chunking); a
+    // never-sampled row gets one null per configured pass
     val perPass = allNames.map { name =>
-      val samples = allSamples.getOrElse(name, Seq.empty)
+      val samples = allSamples.get(name).filter(_.nonEmpty).getOrElse(Seq.fill(passes)(None))
         .map(_.map(t => f"$t%.3f").getOrElse("null"))
-      "\"" + name + "\":[" + (if (samples.isEmpty) "null,null" else samples.mkString(",")) + "]"
+      "\"" + name + "\":" + samples.mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     val isolated = isolatedNames.map("\"" + _ + "\"").mkString("[", ",", "]")
     s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","harness":"$harness","isolated":$isolated,"queries":$qs,"passes":$perPass,"failed":$failed,"sf":"$sfDir"}"""
+  }
+
+  /** One row's samples from the per-pass heavy forks, in pass order;
+    * None when any fork failed or came back without the row, which
+    * sends the caller to the single-fork fallback.
+    */
+  def mergePerPass(name: String, runs: Seq[Option[Map[String, Seq[Option[Double]]]]])
+      : Option[Seq[Option[Double]]] = {
+    val perRun = runs.map(_.flatMap(_.get(name)))
+    if (perRun.forall(_.isDefined)) Some(perRun.flatMap(_.get)) else None
   }
 
   def main(args: Array[String]): Unit = {
@@ -247,6 +258,15 @@ object Bench {
       (dt, ok)
     }
 
+    // SPARK_GRAFT_PASSES: how many timed passes after the warm-up
+    // (default 2 — the 2-pass-min contract). The per-PASS fork for
+    // the heavy rows (r11) runs two 1-pass children and merges, so
+    // each heavy pass sees a TRULY virgin JVM: the r10 driver run
+    // showed the bimodal JIT inflation can fire within a single
+    // row's own JVM when warm-up + 2 passes share it (tfidf charged
+    // [45.3, 36.8] while fresh-JVM single runs read 10-16 s).
+    val nPasses = math.max(1, sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt)
+
     /** Warm-up then TWO COMPLETE PASSES over the subset, per-query min
       * ACROSS passes (not min-of-two-consecutive): back-to-back runs of
       * the same query share whatever JIT/GC state its predecessors left
@@ -263,14 +283,6 @@ object Bench {
         try fn(spark, "/root/testdata/sf0.001").write.format("noop").mode("overwrite").save()
         catch { case _: Throwable => () }
       }
-      // SPARK_GRAFT_PASSES: how many timed passes after the warm-up
-      // (default 2 — the 2-pass-min contract). The per-PASS fork for
-      // the heavy rows (r11) runs two 1-pass children and merges, so
-      // each heavy pass sees a TRULY virgin JVM: the r10 driver run
-      // showed the bimodal JIT inflation can fire within a single
-      // row's own JVM when warm-up + 2 passes share it (tfidf charged
-      // [45.3, 36.8] while fresh-JVM single runs read 10-16 s).
-      val nPasses = math.max(1, sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt)
       val passes = (1 to nPasses).map { p => fns.map { case (n, fn) => n -> timeOne(n, fn, p) } }
       fns.map { case (name, _) =>
         name -> passes.map(_.collectFirst { case (`name`, (t, ok)) => if (ok) Some(t) else None }
@@ -311,9 +323,7 @@ object Bench {
                 System.err.println(s"[bench]   heavy ${c.head} pass $p (own fresh JVM)")
                 runIsolated(c, sfDir, passes = 1)
               }
-              if (runs.forall(_.isDefined))
-                Some(Map(c.head -> runs.flatMap(_.get(c.head))))
-              else {
+              mergePerPass(c.head, runs).map(s => Map(c.head -> s)).orElse {
                 System.err.println(
                   s"[bench] per-pass fork failed for ${c.head}; single-fork 2-pass fallback")
                 runIsolated(c, sfDir)
@@ -331,7 +341,7 @@ object Bench {
     val allNames = selected.keySet.toSeq.sorted
     val harness =
       if (only.isEmpty && !noChunk) "2-pass-min/v5-passfork" else "2-pass-min/v3-cleanstate"
-    val line = renderLine(allNames, allSamples, isolatedNames, harness, sfDir)
+    val line = renderLine(allNames, allSamples, isolatedNames, harness, sfDir, nPasses)
     // Persist FIRST, then print: the driver's log-tail capture clipped
     // the head of the stdout line in r3 AND r4 ("parsed": null) — the
     // authoritative copy is the file; the canonical path is named in

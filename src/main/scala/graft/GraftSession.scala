@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 import org.apache.spark.sql.functions._
 
 /** Session factory with the engine's standard configuration.
@@ -103,10 +105,25 @@ object GraftSession {
     else df.repartition(target, keys: _*)
   }
 
+  /** Session extensions for the engine's own builders (`local`, the
+    * serving tool). Extensions bind when a session is built, so unlike
+    * `tune` they cannot reach a session the caller already created.
+    *
+    * [[graft.plans.HoistLiterals]] runs as a pre-transition columnar
+    * rule: that hook runs before `CollapseCodegenStages` both in the
+    * non-adaptive preparations and in adaptive execution's per-stage
+    * rules, so every generated class sees hoisted literals.
+    */
+  def extensions(e: SparkSessionExtensions): Unit =
+    e.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions: Rule[SparkPlan] = graft.plans.HoistLiterals
+    })
+
   def local(cores: Int = 32, shufflePartitions: Int = 32): SparkSession = {
     val s = SparkSession
       .builder()
       .master(s"local[$cores]")
+      .withExtensions(extensions)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.ui.enabled", "false")

@@ -1,10 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType}
 
 /** Hamming distance between two 64-bit fingerprints (simhash near-dup
   * distance). A native Catalyst expression with codegen: stays inside
@@ -149,9 +150,22 @@ case class SortedIntersectCount(left: Expression, right: Expression)
     extends BinaryExpression {
   override def dataType: DataType = org.apache.spark.sql.types.IntegerType
 
+  /** Both sides `array<string>` or both `array<bigint>`: the merge
+    * dispatches on one side's element type, so a mixed pair or any
+    * other element type is rejected at analysis, not miscounted at
+    * runtime.
+    */
+  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
+    case (ArrayType(StringType, _), ArrayType(StringType, _)) |
+        (ArrayType(LongType, _), ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
+    case (l, r) => TypeCheckResult.TypeCheckFailure(
+      s"graft_sorted_intersect needs two array<string> or two array<bigint> arguments, " +
+        s"got ${l.simpleString} and ${r.simpleString}")
+  }
+
   private lazy val isLong = left.dataType match {
-    case org.apache.spark.sql.types.ArrayType(LongType, _) => true
-    case _                                                 => false
+    case ArrayType(LongType, _) => true
+    case _                      => false
   }
 
   /** Merge body in [[NativeMerges.sortedIntersect]] /

@@ -24,8 +24,12 @@ sealed trait Block {
 }
 
 /** firehose input window (main.rs:1410): keep rows with ts in
-  * (now - seconds, now]. `now` is a fixed literal for determinism —
-  * at rest the table is time-partitioned so this prunes partitions.
+  * (now - seconds, now]. `now` is the request's clock and moves with
+  * every request. The bounds stay plain literals in the logical plan,
+  * so they reach the scan as pushed filters (and prune partitions on a
+  * time-partitioned table); above the scan, `plans.HoistLiterals` passes
+  * them to generated code as references, so a request at a later clock
+  * reuses the classes compiled for an earlier one.
   */
 case class InputWindow(tsCol: String, nowEpochMs: Long, seconds: Long) extends Block {
   def apply(df: DataFrame): DataFrame = {

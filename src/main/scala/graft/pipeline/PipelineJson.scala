@@ -485,9 +485,12 @@ object PipelineJson {
     b.fieldCols.getOrElse(name, if (name == "like_count") col(b.valueCol) else col(name))
 
   /** The reference's HN score (main.rs:4338): likes / (age_h + 2)^gravity
-    * against the deterministic anchor. Reads like_count through the
-    * same field resolution as the count filters, so a Binding that maps
-    * like_count explicitly gets consistent semantics everywhere.
+    * against the binding's clock, `nowEpochMs`, which moves with every
+    * request; `plans.HoistLiterals` passes it to generated code as a
+    * reference, so the compiled classes do not change with it. Reads
+    * like_count through the same field resolution as the count filters,
+    * so a Binding that maps like_count explicitly gets consistent
+    * semantics everywhere.
     */
   private def hnExpr(b: Binding, gravity: Double): Column = {
     val ageH = (lit(b.nowEpochMs) - unix_millis(col(b.tsCol))).cast("double") / lit(3600000.0)

@@ -1342,9 +1342,12 @@ object Round12Ops {
       .select(col("src"), col("dst"), col("p"))
     val starts = agg.groupBy(col("src")).agg(sum(col("n_start")).as("n"))
       .filter(col("n") > 0)
-    val types = agg
+    // the types are the transition endpoints, as in the oracle: a type
+    // seen only as a single-event user's sole event has no transition
+    // and is no state (it still counts as a start in `starts`)
+    val types = trans
       .select(explode(array(col("src"), col("dst"))).as("src"))
-      .filter(col("src").isNotNull).distinct()
+      .distinct()
     // coalesce(1) collapses the union's 2-partition output so every
     // downstream cross product is SinglePartition × SinglePartition;
     // the shuffle_replicate_nl hint then plans a 1-partition cartesian

@@ -87,4 +87,31 @@ class BenchSpec extends AnyFunSuite {
     assert(root.get("isolated").toString == "[\"alpha_ok\"]")
     assert(root.get("sf").asText() == "/root/testdata/sf0.001")
   }
+
+  test("a never-sampled row renders one null per configured pass") {
+    val names = Seq("alpha_ok", "gamma_missing")
+    val samples = Map("alpha_ok" -> Seq(Some(1.5)))
+    val one = Bench.renderLine(names, samples, Seq.empty, "2-pass-min/v3-cleanstate", "sf", passes = 1)
+    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(one)
+    assert(root.get("passes").get("gamma_missing").toString == "[null]")
+    assert(one.contains("\"alpha_ok\":[1.500]"))
+    assert(root.get("failed").toString == "[\"gamma_missing\"]")
+    // at the default two passes the line is the one the driver always parsed
+    assert(Bench.renderLine(names, samples, Seq.empty, "h", "sf") ==
+      Bench.renderLine(names, samples, Seq.empty, "h", "sf", passes = 2))
+    assert(Bench.renderLine(names, samples, Seq.empty, "h", "sf").contains("\"gamma_missing\":[null,null]"))
+  }
+
+  test("per-pass heavy forks merge in pass order, and a fork missing the row falls back") {
+    val row = "tfidf_cosine_join"
+    val ok = Seq(Some(Map(row -> Seq(Some(2.0)))), Some(Map(row -> Seq(Some(1.0)))))
+    assert(Bench.mergePerPass(row, ok) == Some(Seq(Some(2.0), Some(1.0))))
+    // a fork that ran but timed the row as failed keeps its null sample
+    val failedPass = Seq(Some(Map(row -> Seq(None))), Some(Map(row -> Seq(Some(1.0)))))
+    assert(Bench.mergePerPass(row, failedPass) == Some(Seq(None, Some(1.0))))
+    // a fork whose output lacks the row, or that did not run, is no merge
+    val missing = Seq(Some(Map(row -> Seq(Some(2.0)))), Some(Map("other" -> Seq(Some(1.0)))))
+    assert(Bench.mergePerPass(row, missing).isEmpty)
+    assert(Bench.mergePerPass(row, Seq(Some(Map(row -> Seq(Some(2.0)))), None)).isEmpty)
+  }
 }

@@ -2682,6 +2682,28 @@ class QueryCatalogSpec extends AnyFunSuite {
     assert(df.filter(col("removed") === "view").head.getAs[Double]("removal_effect") > 0)
   }
 
+  test("markov attribution ignores a type seen only as a single-event user's sole event") {
+    import org.apache.spark.sql.functions._
+    val s = spark
+    import s.implicits._
+    def at(min: Int) = new java.sql.Timestamp(1700000000000L + min * 60000L)
+    // 'share' occurs once, as user 4's only event: no transition has it
+    val evs = Seq(
+      (1L, at(0), 1L, "view"), (1L, at(1), 2L, "click"), (1L, at(2), 3L, "purchase"),
+      (2L, at(0), 4L, "view"), (2L, at(3), 5L, "purchase"),
+      (3L, at(0), 6L, "click"), (3L, at(1), 7L, "view"),
+      (4L, at(0), 8L, "share")
+    ).toDF("user_id", "ts", "event_id", "event_type")
+    val tmp = java.nio.file.Files.createTempDirectory("graft_markov").toString
+    evs.write.parquet(s"$tmp/events.parquet")
+    val got = SparkEntry.queries("markov_attribution")(spark, tmp)
+    assert(got.select(col("removed")).as[String].collect().toSeq == Seq("click", "none", "view"))
+    // the oracle's own SQL, run over the same events, gives the same rows
+    Tables.events(spark, tmp).createOrReplaceTempView("events")
+    val oracle = spark.sql(SparkEntry.oracleSql("markov_attribution"))
+    assert(got.collect().toSeq == oracle.collect().toSeq)
+  }
+
   test("sequential monitor boundary decays and cumulative counts are monotone") {
     import org.apache.spark.sql.functions._
     val df = SparkEntry.queries("ab_sequential_monitor")(spark, dir).cache()
@@ -4030,6 +4052,19 @@ class QueryCatalogSpec extends AnyFunSuite {
         array(named_struct('token','a','u',1.0D), named_struct('token','b','u',2.0D)))""").collect()
     }
     assert(msgs(end).exists(_.contains("null array element")), s"wrong error: $end")
+  }
+
+  test("graft_sorted_intersect rejects mixed and non-string/bigint arrays at analysis") {
+    for ((a, b) <- Seq(
+        "array('a','b')" -> "array(1L, 2L)",
+        "array(1L, 2L)" -> "array('a','b')",
+        "array(1, 2)" -> "array(1, 2)",
+        "array(1, 2)" -> "array(1L, 2L)")) {
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        spark.sql(s"SELECT graft_sorted_intersect($a, $b)")
+      }
+      assert(e.getMessage.contains("two array<string> or two array<bigint>"), s"$a, $b: $e")
+    }
   }
 
   test("int-token dictionary merges are bit-identical to the string merges under a bijection") {

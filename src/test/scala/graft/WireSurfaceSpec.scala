@@ -26,6 +26,45 @@ case class WirePost(
     root: Option[Long],
     record_id: Option[Long])
 
+/** The synthetic store and the reference semantics the wire specs
+  * check against, shared with the specs that rerun a payload under a
+  * moving clock.
+  */
+object WireSurfaceSpec {
+  val NowMs: Long = 1700000000000L
+  private def tsAt(minsAgo: Long) = new java.sql.Timestamp(NowMs - minsAgo * 60000L)
+
+  val Posts: Seq[WirePost] = Seq(
+    //       id author ts         likes reposts replies imgs lang  record    video        is_reply labels           tags              parent   root     record_id
+    WirePost(1L, 10L, tsAt(10), 50.0, 7, 1, 0, "en", "", None, false, Nil, Seq("spark"), None, None, None),
+    WirePost(2L, 10L, tsAt(20), 5.0, 2, 9, 1, "de", "post:3", Some("v.mp4"), false, Seq("Spoiler"), Seq("Scala"), None, None, Some(3L)),
+    WirePost(3L, 11L, tsAt(30), 30.0, 9, 4, 2, "en", "", None, true, Nil, Nil, Some(1L), Some(1L), None),
+    WirePost(4L, 11L, tsAt(40), 8.0, 1, 2, 3, "fr", "feed:xyz", None, true, Seq("nsfw", "spoiler"), Seq("spark", "sql"), Some(3L), Some(1L), None),
+    WirePost(5L, 12L, tsAt(50), 90.0, 4, 0, 0, "en", "post:1", Some("w.mp4"), false, Nil, Nil, None, None, Some(1L)))
+
+  /** Ids a `firehose` input of `seconds` followed by an `hn` sort and a
+    * `limit` returns at clock `nowMs`: the reference's window
+    * (main.rs:1410, ms-floored ts in (now - seconds, now]) and its HN
+    * score (main.rs:4338) ranked on the value rounded to the binding's
+    * default 6 places, id ascending on ties.
+    */
+  def windowHnOracle(nowMs: Long, seconds: Long, gravity: Double, limit: Int): Seq[Long] =
+    Posts
+      .filter { p =>
+        val ms = p.ts.getTime
+        ms > nowMs - seconds * 1000L && ms <= nowMs
+      }
+      .map { p =>
+        val ageH = (nowMs - p.ts.getTime).toDouble / 3600000.0
+        val hn = BigDecimal(p.likes / math.pow(ageH + 2.0, gravity))
+          .setScale(6, BigDecimal.RoundingMode.HALF_UP)
+        (p.id, hn)
+      }
+      .sortBy { case (id, hn) => (-hn, id) }
+      .take(limit)
+      .map(_._1)
+}
+
 /** The wire subjects and block variants the oracle-checked catalog
   * queries don't reach (item / embed / videos / labels / image_count
   * filters, did input, non_duplicates, count-sort variants, reply
@@ -36,20 +75,12 @@ case class WirePost(
 class WireSurfaceSpec extends AnyFunSuite {
   lazy val spark: SparkSession = GraftSession.local(cores = 4, shufflePartitions = 4)
 
-  val NowMs: Long = 1700000000000L
-  private def tsAt(minsAgo: Long) = new java.sql.Timestamp(NowMs - minsAgo * 60000L)
+  import WireSurfaceSpec._
 
   lazy val store: DataFrame = {
     val s = spark
     import s.implicits._
-    Seq(
-      //       id author ts         likes reposts replies imgs lang  record    video        is_reply labels           tags              parent   root     record_id
-      WirePost(1L, 10L, tsAt(10), 50.0, 7, 1, 0, "en", "", None, false, Nil, Seq("spark"), None, None, None),
-      WirePost(2L, 10L, tsAt(20), 5.0, 2, 9, 1, "de", "post:3", Some("v.mp4"), false, Seq("Spoiler"), Seq("Scala"), None, None, Some(3L)),
-      WirePost(3L, 11L, tsAt(30), 30.0, 9, 4, 2, "en", "", None, true, Nil, Nil, Some(1L), Some(1L), None),
-      WirePost(4L, 11L, tsAt(40), 8.0, 1, 2, 3, "fr", "feed:xyz", None, true, Seq("nsfw", "spoiler"), Seq("spark", "sql"), Some(3L), Some(1L), None),
-      WirePost(5L, 12L, tsAt(50), 90.0, 4, 0, 0, "en", "post:1", Some("w.mp4"), false, Nil, Nil, None, None, Some(1L))
-    ).toDF()
+    Posts.toDF()
   }
 
   lazy val memberList: org.apache.spark.sql.DataFrame = {
@@ -181,6 +212,21 @@ class WireSurfaceSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getDouble(1))).toMap
     assert(scores(5L) == 10.0) // max likes → 1.0 × 10
     assert(math.abs(scores(1L) - 50.0 / 90.0 * 10) < 1e-6)
+  }
+
+  test("firehose window and hn sort follow the reference at the store's clock") {
+    // post 4 sits exactly on the 40-minute edge: (now - s, now] drops it
+    val out = PipelineJson.run(
+      store,
+      """{"blocks":[
+        |  {"type":"input","inputType":"firehose","firehoseSeconds":2400},
+        |  {"type":"sort","sortType":"hn","gravity":"1.8","sortDirection":"desc"},
+        |  {"type":"limit","count":4}
+        |]}""".stripMargin,
+      binding)
+    assert(out.select(col("id")).collect().map(_.getLong(0)).toSeq ==
+      windowHnOracle(NowMs, 2400L, 1.8, 4))
+    assert(windowHnOracle(NowMs, 2400L, 1.8, 4) == Seq(1L, 3L, 2L))
   }
 
   test("count sorts rank by the bound field with id tie-break") {
